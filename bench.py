@@ -145,8 +145,6 @@ def main() -> None:
         banded_dequeue=banded,
         use_seen_filter=use_seen,
         seen_mode=seen_mode,
-        # approx mode never reads the identity index — skip maintaining it
-        use_bucketed_index=seen_mode != "approx",
         seen_shards=seen_shards,
         seen_capacity_per_shard=max(
             100_000, n_pages // 16, preseed * 2 // seen_shards

@@ -104,7 +104,6 @@ def main() -> None:
         banded_dequeue=True,
         use_seen_filter=True,
         seen_mode="approx",
-        use_bucketed_index=False,
         seen_shards=32,
         seen_capacity_per_shard=max(100_000, n_pages // 16),
         # r6: compaction overlaps the next round's dequeue+fetch

@@ -7,8 +7,6 @@ record. This file exists to attribute the round's wall time to its
 operators and to A/B single optimizations. Modes (argv[1]):
 
   gen      time build_bench_pages -> parquet (the bench's gen_pages)
-  gentext  A/B: full-page extract UDF vs per-doc precompute, and
-           verify byte-identity of the two text columns
   round    engine warm-up + instrumented rounds with per-stage
            sub-timings (dequeue parts, fetch join vs join+extract,
            round write, merge parts), each isolated via noop writes
@@ -75,38 +73,6 @@ def mode_gen():
     ).parquet(os.path.join(WORKDIR, "pages"))
     print(json.dumps({"gen_pages": round(time.monotonic() - t0, 3)}), flush=True)
     spark.stop()
-
-
-def mode_gentext():
-    """A/B the text computation inside build_bench_pages and verify
-    byte-identity between the legacy full-page UDF and the per-doc
-    precompute on every page."""
-    from pompspark.benchgen import build_bench_pages
-
-    spark = _spark()
-    docs = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
-
-    for variant in ("legacy", "fast"):
-        os.environ["BENCHGEN_TEXT_MODE"] = variant
-        df = build_bench_pages(spark, docs, n_pages=N_PAGES)
-        _noop(df.select("url", "text"), f"gentext:{variant}", spark)
-    # identity check: run both, join on url, count mismatches
-    os.environ["BENCHGEN_TEXT_MODE"] = "legacy"
-    a = build_bench_pages(spark, docs, n_pages=N_PAGES).select(
-        "url", F.col("text").alias("ta")
-    )
-    os.environ["BENCHGEN_TEXT_MODE"] = "fast"
-    b = build_bench_pages(spark, docs, n_pages=N_PAGES).select(
-        "url", F.col("text").alias("tb")
-    )
-    spark.sparkContext.setJobDescription("gentext:identity-check")
-    bad = a.join(b, "url").filter(
-        ~F.col("ta").eqNullSafe(F.col("tb"))
-    ).count()
-    print(json.dumps({"text_mismatches": bad}), flush=True)
-    spark.stop()
-    if bad:
-        sys.exit(1)
 
 
 def _setup_engine(spark):
@@ -275,5 +241,4 @@ def mode_explain():
 
 if __name__ == "__main__":
     mode = sys.argv[1] if len(sys.argv) > 1 else "round"
-    {"gen": mode_gen, "gentext": mode_gentext, "round": mode_round,
-     "explain": mode_explain}[mode]()
+    {"gen": mode_gen, "round": mode_round, "explain": mode_explain}[mode]()

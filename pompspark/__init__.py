@@ -11,13 +11,13 @@ Iceberg-style tables, per the north rule in BASELINE.json:
   ``pompspark.politeness``)
 - BFS / DFS / priority crawl ordering trace-equivalent to pomp's queue
   semantics (``pompspark.engine`` vs ``tests/oracle_sim.py``)
-- vectorized fetch/extract pandas UDFs with a byte-identity contract
-  (``pompspark.extract``)
+- one Arrow-batched extract boundary (``mapInArrow`` over the pinned
+  ``ref_extract``) with a byte-identity contract (``pompspark.extract``)
 - checkpointed snapshot catalog for exact resume (``pompspark.tables``)
 
 Everything is DataFrame-first: Catalyst plans the physical execution;
 Python holds only the driver-side round loop. No per-row Python UDFs —
-all UDFs are Arrow-batched pandas UDFs (input_hint mandate).
+every Python hop is Arrow-batched (input_hint mandate).
 
 Reference semantics (symbol-level cites, see SURVEY.md §0 for the
 citation convention): the crawl loop mirrors ``Pomp.pump``

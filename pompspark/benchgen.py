@@ -57,41 +57,37 @@ def build_bench_pages(
     one doc shares the same extracted body words; only the title varies
     (entity-free, tag-free, whitespace-free by construction) and the
     anchor trailer contributes a fixed ``"L" * outdegree`` word list.
-    So the extract UDF runs once per DOC over a minimal page rendering
+    So the extraction runs once per DOC over a minimal page rendering
     (N_docs x ~30 KB instead of N_pages x ~30 KB ≈ 30 GB through Arrow
     at bench scale), and the per-page text is assembled JVM-side as
     ``title [doc_body_text] L L ... L``. The doc rendering keeps the
     EXACT byte context the full page gives the body (tag characters
     directly before and after it), so tag/comment/entity constructs
     that straddle the body's edges resolve identically; byte-identity
-    with the legacy per-page UDF is pinned by tests/test_benchgen.py
-    (boundary-nasty synthetic docs + every sf0.001 doc) and was
-    verified over all 10^6 bench pages (bench_extra.py gentext, 0
-    mismatches). BENCHGEN_TEXT_MODE=legacy restores the per-page UDF
-    (the A/B + identity harness)."""
-    import os as _os
+    with ``ref_extract`` over each full page is pinned by
+    tests/test_benchgen.py (boundary-nasty synthetic docs + every
+    sf0.001 doc) and was verified over all 10^6 bench pages (0
+    mismatches, OPTIMIZATION_r06.md §1)."""
+    from pompspark.extract import extract_attach_arrow
 
-    from pompspark.extract import register_extract_udf
-
-    legacy = _os.environ.get("BENCHGEN_TEXT_MODE", "fast") == "legacy"
     n_docs = documents.count()
-    docs = documents.select(
-        F.col("doc_id").alias("__doc_id"), F.col("text").alias("__body"), "lang"
+    # per-doc body text: the pinned extractor over a minimal page
+    # holding ONLY the repeated body (empty title, no anchors) — same
+    # tag-boundary byte context as the full page.
+    mini = F.encode(
+        F.concat(
+            F.lit("<html><head><title></title></head><body>"),
+            F.repeat(F.coalesce(F.col("text"), F.lit("")), body_repeat),
+            F.lit("</body></html>"),
+        ),
+        "UTF-8",
     )
-    if not legacy:
-        # per-doc body text: the pinned extractor over a minimal page
-        # holding ONLY the repeated body (empty title, no anchors) —
-        # same tag-boundary byte context as the full page.
-        ext0 = register_extract_udf()
-        mini = F.encode(
-            F.concat(
-                F.lit("<html><head><title></title></head><body>"),
-                F.repeat(F.coalesce(F.col("__body"), F.lit("")), body_repeat),
-                F.lit("</body></html>"),
-            ),
-            "UTF-8",
+    docs = extract_attach_arrow(
+        documents.select(
+            F.col("doc_id").alias("__doc_id"), F.col("text").alias("__body"),
+            "lang", mini.alias("html"),
         )
-        docs = docs.withColumn("__body_text", ext0(mini).getField("text"))
+    ).select("__doc_id", "__body", "lang", F.col("text").alias("__body_text"))
     idx = spark.range(n_pages).select(F.col("id").alias("i"))
     base = idx.withColumn("__doc_id", (F.col("i") % n_docs).cast("long"))
     # broadcast docs (5e3 rows) onto the page universe
@@ -118,23 +114,17 @@ def build_bench_pages(
         F.repeat(F.coalesce(F.col("__body"), F.lit("")), body_repeat),
         anchors, F.lit("</body></html>"),
     )
-    if legacy:
-        ext = register_extract_udf()
-        text_col = ext("html").getField("text")
-    else:
-        # JVM-side assembly: title ⊕ body_text ⊕ "L"*outdegree, joined
-        # by single spaces with empty segments elided — exactly the
-        # ws-collapse semantics of the pinned extractor over the full
-        # page (title and anchors contribute these exact words; the
-        # body's words come from the per-doc extraction above).
-        anchors_text = " ".join(["L"] * outdegree)
-        segs = [
-            title,
-            F.when(
-                F.length(F.col("__body_text")) > 0, F.col("__body_text")
-            ),
-        ] + ([F.lit(anchors_text)] if outdegree else [])
-        text_col = F.concat_ws(" ", *[s for s in segs if s is not None])
+    # JVM-side assembly: title ⊕ body_text ⊕ "L"*outdegree, joined by
+    # single spaces with empty segments elided — exactly the ws-collapse
+    # semantics of the pinned extractor over the full page (title and
+    # anchors contribute these exact words; the body's words come from
+    # the per-doc extraction above).
+    anchors_text = " ".join(["L"] * outdegree)
+    segs = [
+        title,
+        F.when(F.length(F.col("__body_text")) > 0, F.col("__body_text")),
+    ] + ([F.lit(anchors_text)] if outdegree else [])
+    text_col = F.concat_ws(" ", *segs)
     return (
         base.withColumn("html", F.encode(html_str, "UTF-8"))
         .withColumn(

@@ -284,9 +284,3 @@ def url_hash_col(col):
     from pyspark.sql import functions as F
 
     return F.xxhash64(col).alias("url_hash")
-
-
-def murmur3_col(col):
-    from pyspark.sql import functions as F
-
-    return F.hash(col).alias("url_murmur3")

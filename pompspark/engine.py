@@ -3,14 +3,15 @@ rounds (O11).
 
 pomp analog, stage by stage (pomp/core/engine.py Pomp.pump):
     prepare()            -> CrawlEngine.seed() + table creation
-    queue.get_requests   -> frontier.dequeue (rank-over-window + budgets)
+    queue.get_requests   -> frontier.dequeue_banded (rank-over-window +
+                            budgets; bands pruned when compacted banded)
     process_requests     -> request_middlewares (DataFrame transforms;
                             a middleware FILTERS instead of returning
                             None — SURVEY §2.4.2 drop semantics)
     downloader.get       -> fetcher.fetch (join or mapInPandas batch)
     process_response(s)  -> response_middlewares, reverse order
     process_exception    -> status/error columns; errors never throw
-    extract_items        -> the extract UDF inside the fetcher
+    extract_items        -> the extract boundary inside the fetcher
     on_parse_result      -> items -> pipelines -> fetch_log append;
                             requests -> link merge -> frontier append
     StopCommand          -> empty dequeue ends the loop
@@ -40,7 +41,6 @@ from pompspark.frontier import (
     S_RANK,
     S_ROUND,
     FrontierStore,
-    dequeue,
     new_frontier_rows,
     normalize_seeds,
 )
@@ -138,8 +138,6 @@ class CrawlEngine:
         seen_shards: int = 16,
         seen_capacity_per_shard: int = 1_000_000,
         seen_mode: str = "exact",
-        use_bucketed_index: bool = True,
-        index_buckets: int = 32,
         banded_dequeue: bool = False,
         catalog=None,
         frontier_transform: Callable[[DataFrame], DataFrame] | None = None,
@@ -169,6 +167,9 @@ class CrawlEngine:
         # (a day-long header must not park the idle loop for 86k
         # rounds; real crawlers clamp to minutes)
         self.max_retry_delay_rounds = max_retry_delay_rounds
+        # compaction layout only: lay queued rows out in sort-key
+        # bands so dequeue_banded can prune (it reads whatever layout
+        # the last compaction left).
         self.banded_dequeue = banded_dequeue
         # r6 (guide §2.6, r5 verdict composed-mode finding: a 25.3 s
         # synchronous compact inside a 74.7 s round): compaction runs
@@ -195,9 +196,9 @@ class CrawlEngine:
         # dequeue knowing about it. Schema is re-pinned after the call.
         self.frontier_transform = frontier_transform
 
-        self.store = FrontierStore(
-            self.cat, index_buckets=index_buckets, use_index=use_bucketed_index
-        )
+        # approx seen mode never reads the merge identity index, so it
+        # skips maintaining one.
+        self.store = FrontierStore(self.cat, use_index=seen_mode != "approx")
         # running frontier row count (footer-derived at init, then
         # maintained from append deltas — zero extra Spark jobs): the
         # dequeue's scale-adaptive salt pre-rank gate (frontier.py
@@ -523,41 +524,19 @@ class CrawlEngine:
 
         self.last_round_timings = timings
 
-        if self.banded_dequeue:
-            from pompspark.frontier import dequeue_banded
-
-            raw, n_dequeued, self.last_bands_read = dequeue_banded(
-                self.store, self.robots_df, ordering=self.ordering,
-                robots_rows=self.robots_rows,
-                n_queued_hint=self._frontier_rows,
-                per_round_budget=round_budget or self.per_round_budget,
-                per_host_budget=self.per_host_budget,
-                round_seconds=self.round_seconds,
-                current_round=r,
-                retry_delay_rounds=self.retry_delay_rounds,
-                retry_enabled=self.max_retries > 0,
-            )
-        else:
-            raw = dequeue(
-                self.store.queued(
-                    current_round=r, retry_delay_rounds=self.retry_delay_rounds,
-                    retry_enabled=self.max_retries > 0,
-                ),
-                self.robots_df,
-                ordering=self.ordering,
-                robots_rows=self.robots_rows,
-                per_round_budget=round_budget or self.per_round_budget,
-                per_host_budget=self.per_host_budget,
-                round_seconds=self.round_seconds,
-                n_queued_hint=self._frontier_rows,
-            )
-            raw = raw.persist()
-            n_dequeued = frontier_mod.materialize_batch(raw)
-            # raw's cache now backs every downstream read; the top-k's
-            # internal sort cache (if the parallel path ran) is done.
-            topk_cache = getattr(raw, "_topk_cache", None)
-            if topk_cache is not None:
-                topk_cache.unpersist()
+        # persisted + materialized batch; without a banded layout of
+        # this ordering it is one full-scan dequeue
+        raw, n_dequeued, self.last_bands_read = frontier_mod.dequeue_banded(
+            self.store, self.robots_df, ordering=self.ordering,
+            robots_rows=self.robots_rows,
+            n_queued_hint=self._frontier_rows,
+            per_round_budget=round_budget or self.per_round_budget,
+            per_host_budget=self.per_host_budget,
+            round_seconds=self.round_seconds,
+            current_round=r,
+            retry_delay_rounds=self.retry_delay_rounds,
+            retry_enabled=self.max_retries > 0,
+        )
         lap("dequeue")
         if n_dequeued == 0:
             raw.unpersist()

@@ -4,11 +4,13 @@
 input_hint: "per-row invariant vs the reference: byte-identical
 extracted text per url"). It is pure-Python/regex, deterministic,
 locale-free, and operates on bytes only — no wall clock, no locale
-tables. The Spark path (``extract_udf_batches`` via ``mapInPandas`` /
-``pandas_udf``) calls the SAME function on Arrow batches, so
-byte-identity holds by construction; ``tests/test_extract.py`` still
-asserts it row-by-row on utf-8 bytes, and the engine re-checks it
-against the precomputed ``pages.text`` column.
+tables. Spark crosses into Python for it at ONE boundary,
+``extract_attach_arrow`` (``mapInArrow``), which calls the SAME
+function on Arrow batches, so byte-identity holds by construction;
+``tests/test_extract.py`` still asserts it row-by-row on utf-8 bytes.
+``HttpFetcher`` is the only other caller: its transport already runs
+in a ``mapInPandas`` pass, and ``extract_frame`` shares that pass
+rather than adding a second Python hop.
 
 pomp analog: ``BaseCrawler.extract_items(response)`` +
 ``BaseCrawler.next_requests(response)`` (pomp/core/base.py) — the user
@@ -23,7 +25,6 @@ from __future__ import annotations
 
 import html as _htmlmod
 import re
-from typing import Iterator
 
 import pandas as pd
 
@@ -87,38 +88,20 @@ def extract_frame(html_series: pd.Series) -> pd.DataFrame:
 
 # ---------------------------------------------------------------- Spark side
 
-EXTRACT_STRUCT_DDL = "text string, links array<string>"
-
-
-def register_extract_udf():
-    """pandas UDF html:binary -> struct<text:string, links:array<string>>.
-
-    Arrow-batched; the hot path stays vectorized per input_hint ("no
-    per-row Python"). Used as a column expression so Catalyst can
-    pipeline it inside the fetch round's single stage.
-    """
-    from pyspark.sql import functions as F
-
-    @F.pandas_udf(EXTRACT_STRUCT_DDL)
-    def extract_udf(html: pd.Series) -> pd.DataFrame:
-        return extract_frame(html)
-
-    return extract_udf
-
 
 def extract_attach_arrow(df, html_col: str = "html"):
     """Append ``text``/``links`` extracted from ``html_col`` and DROP
-    the html column — pyarrow-native ``mapInArrow`` (r6, guide §4.2).
+    the html column — pyarrow-native ``mapInArrow``, the one Spark-side
+    extract boundary (SimulatedFetcher, benchgen).
 
-    Vs the pandas_udf column path this skips the Arrow->pandas->Arrow
+    Vs a pandas_udf column this skips the Arrow->pandas->Arrow
     conversion layers on both sides (binary Series materialization in,
     object-Series-of-lists to list<string> out); measured ~2.7 s/round
-    at bench scale on identical output (bench/fetch_boundary_ab.py:
-    pandas 15.6-16.4 s vs arrow 13.2-13.4 s on the same joined hits).
-    NULL html rows yield text=NULL, links=[] — exactly the pandas
-    path's ``when(ok, ...)`` gating when the caller nulls html for
-    non-200 rows. Remains a narrow map op: fuses into the caller's
-    scan/join stage, no exchange."""
+    at bench scale on identical output (OPTIMIZATION_r06.md §4: pandas
+    15.6-16.4 s vs arrow 13.2-13.4 s on the same joined hits). NULL
+    html rows yield text=NULL, links=[], so a caller that nulls html
+    for non-200 rows gets no text off the ok path. Remains a narrow map
+    op: fuses into the caller's scan/join stage, no exchange."""
     import pyarrow as pa
     from pyspark.sql import types as T
 
@@ -156,28 +139,3 @@ def extract_attach_arrow(df, html_col: str = "html"):
             )
 
     return df.mapInArrow(gen, schema=out_schema)
-
-
-def extract_map_in_pandas(df, html_col: str = "html"):
-    """mapInPandas variant for when the whole row flows through Python
-    anyway (e.g. a real HTTP fetch stage on a cluster). Preserves all
-    input columns, appends text + links."""
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType(
-        list(df.schema.fields)
-        + [
-            T.StructField("text", T.StringType()),
-            T.StructField("links", T.ArrayType(T.StringType())),
-        ]
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            ext = extract_frame(b[html_col])
-            b = b.copy()
-            b["text"] = ext["text"]
-            b["links"] = ext["links"]
-            yield b
-
-    return df.mapInPandas(gen, schema=out_schema)

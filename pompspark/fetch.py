@@ -134,11 +134,10 @@ class SimulatedFetcher:
         # non-200 rows is nulled BEFORE the boundary, so failed rows
         # ship a null bitmap instead of 30 KB bodies, and the
         # passthrough columns (~150 B/row) ride zero-copy next to the
-        # one heavy column. Output identical to the previous
-        # pandas_udf column path (text NULL / links [] off the ok
-        # path); measured ~2.7 s/round cheaper at bench scale
-        # (bench/fetch_boundary_ab.py). Still a narrow map: fuses into
-        # the scan/join stage, no exchange.
+        # one heavy column (text NULL / links [] off the ok path);
+        # measured ~2.7 s/round cheaper than a pandas_udf column at
+        # bench scale (OPTIMIZATION_r06.md §4). Still a narrow map:
+        # fuses into the scan/join stage, no exchange.
         from pompspark.extract import extract_attach_arrow
 
         pre = (

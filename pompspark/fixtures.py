@@ -1,4 +1,4 @@
-"""Deterministic fixture builders (FIXTURES.md F1–F4). Seed 42, no
+"""Deterministic fixture builders (FIXTURES.md F1–F4). No rng, no
 wall-clock, no network. Used by tests, __spark_entry__ and bench —
 shipping them in the package keeps all three on one code path.
 
@@ -11,7 +11,6 @@ sitemap becomes a table and the canned responses become the synthetic
 from __future__ import annotations
 
 import datetime as dt
-import random
 
 import pandas as pd
 
@@ -106,54 +105,3 @@ def small_robots_df(spark):
     ]
     return spark.createDataFrame(pd.DataFrame(rows), schema=ROBOTS_CACHE)
 
-
-# ---------------------------------------------------------------- F1/F2 large
-
-def synth_sitemap(n_pages: int, n_hosts: int = 1000, outdegree: int = 20,
-                  zipf_s: float = 1.2, seed: int = 42) -> dict[str, list[str]]:
-    """Bench-scale crawl graph: zipf-weighted hosts (hot-host skew — the
-    top host owns a large share of urls), fixed outdegree, edges chosen
-    by rng(seed) over the url universe. Deterministic."""
-    rng = random.Random(seed)
-    # zipf weights over hosts
-    weights = [1.0 / ((k + 1) ** zipf_s) for k in range(n_hosts)]
-    tot = sum(weights)
-    weights = [w / tot for w in weights]
-    # assign each page a host by cumulative weights (deterministic stream)
-    urls = []
-    for i in range(n_pages):
-        r = rng.random()
-        acc = 0.0
-        h = n_hosts - 1
-        for k, w in enumerate(weights):
-            acc += w
-            if r <= acc:
-                h = k
-                break
-        urls.append(f"http://h{h:04d}.example/p{i}")
-    sitemap = {}
-    for i, u in enumerate(urls):
-        kids = [urls[rng.randrange(n_pages)] for _ in range(outdegree)]
-        sitemap[u] = kids
-    return sitemap
-
-
-def synth_pages_pdf(documents_pdf: pd.DataFrame, n_hosts: int = 1000,
-                    outdegree: int = 20, seed: int = 42) -> pd.DataFrame:
-    """F1 large: pages derived from /root/testdata documents (webtext
-    payload). One page per document row; body = documents.text."""
-    n = len(documents_pdf)
-    sitemap = synth_sitemap(n, n_hosts=n_hosts, outdegree=outdegree, seed=seed)
-    urls = list(sitemap.keys())
-    bodies = {u: (documents_pdf["text"].iloc[i] or "") for i, u in enumerate(urls)}
-    langs = {u: documents_pdf["lang"].iloc[i] for i, u in enumerate(urls)}
-    return pages_rows(sitemap, bodies=bodies, langs=langs)
-
-
-def seeds_df(spark, urls: list[str], priority: float = 1.0):
-    from pompspark.schemas import SEEDS
-
-    return spark.createDataFrame(
-        pd.DataFrame({"url": urls, "priority": [priority] * len(urls)}),
-        schema=SEEDS,
-    )

@@ -221,17 +221,8 @@ def materialize_batch(batch: DataFrame) -> int:
 # pre-rank is a pure extra Exchange+sort over the whole queued set
 # (measured ~1s/round at bench scale). Scale-adaptive: the engine
 # passes the frontier's footer row count; past the threshold the salt
-# level engages exactly as before. Env-overridable for clusters whose
-# skew profile differs.
+# level engages exactly as before.
 SALT_PRERANK_MIN_ROWS = 4_000_000
-
-
-def _salt_min_rows() -> int:
-    import os
-
-    return int(os.environ.get(
-        "POMPSPARK_SALT_MIN_ROWS", str(SALT_PRERANK_MIN_ROWS)
-    ))
 
 
 def dequeue(
@@ -270,7 +261,7 @@ def dequeue(
     df = df.filter(~F.col("disallowed"))
     cap = politeness_cap_col(per_host_budget, round_seconds)
 
-    use_salt = n_queued_hint is None or n_queued_hint >= _salt_min_rows()
+    use_salt = n_queued_hint is None or n_queued_hint >= SALT_PRERANK_MIN_ROWS
     if use_salt:
         # level 1: per-(host, salt) — defuses hot-host window skew.
         w1 = Window.partitionBy("host", "salt").orderBy(*keys)
@@ -329,7 +320,10 @@ def dequeue_banded(
     """Band-pruned dequeue: read sort-key-prefix bands of the queued
     frontier in key order, growing the prefix geometrically, and STOP
     as soon as the politeness-capped selection fills the round budget.
-    Returns (persisted batch, n_rows, bands_read).
+    Returns (persisted batch, n_rows, bands_read). The engine's one
+    dequeue call: without a banded layout for this ordering (never
+    compacted banded, or the table moved past the marker) it runs ONE
+    full-scan ``dequeue`` and returns bands_read = -1.
 
     EXACTNESS: bands are ordered by a strict prefix of the sort key
     ((priority desc, depth asc) for BFS; (priority desc,
@@ -352,21 +346,26 @@ def dequeue_banded(
     banded trace-equivalence grid). At a 10^10-row frontier with a
     10^7 budget this reads the active crawl band(s), not the whole
     table, each round."""
-    info = store.band_info()
-    want_col = BAND_COL[ordering]
-    if info is None or info["band_col"] != want_col:
-        # no valid banded layout for this ordering: full scan
+    def run(source: DataFrame | None = None) -> tuple[DataFrame, int]:
         batch = dequeue(
-            store.queued(current_round, retry_delay_rounds, retry_enabled),
+            store.queued(current_round, retry_delay_rounds, retry_enabled,
+                         source=source),
             robots_df, ordering, per_round_budget, per_host_budget,
             round_seconds, parallel_topk_threshold, robots_rows,
             n_queued_hint=n_queued_hint,
-        )
-        batch = batch.persist()
+        ).persist()
         n = materialize_batch(batch)
+        # the batch's cache now backs every downstream read; the
+        # parallel top-k's internal sort cache (if it ran) is done.
         cache = getattr(batch, "_topk_cache", None)
         if cache is not None:
             cache.unpersist()
+        return batch, n
+
+    info = store.band_info()
+    if info is None or info["band_col"] != BAND_COL[ordering]:
+        # no valid banded layout for this ordering: one full scan
+        batch, n = run()
         return batch, n, -1
 
     band_col = info["band_col"]
@@ -396,20 +395,7 @@ def dequeue_banded(
             pred = pred | (
                 (F.col("priority") == F.lit(p)) & F.col(band_col).isin(bs)
             )
-        src = store.banded_source(pred, info=info)
-        eligible = store.queued(
-            current_round, retry_delay_rounds, retry_enabled, source=src
-        )
-        batch = dequeue(
-            eligible, robots_df, ordering, per_round_budget,
-            per_host_budget, round_seconds, parallel_topk_threshold,
-            robots_rows, n_queued_hint=n_queued_hint,
-        )
-        batch = batch.persist()
-        n = materialize_batch(batch)
-        cache = getattr(batch, "_topk_cache", None)
-        if cache is not None:
-            cache.unpersist()
+        batch, n = run(store.banded_source(pred, info=info))
         if exhausted:
             return batch, n, i
         if n >= per_round_budget:
@@ -1022,18 +1008,15 @@ class FrontierStore:
         compacted queued rows out in sort-key-prefix bands for the
         band-pruned dequeue.
 
-        ``incremental`` (default): fold and rewrite ONLY the queued
-        partition — terminal-state files are never rewritten (r3
-        verdict #5: a full compact at 10^10 rows is a 1.2 TB rewrite
-        per call). Sound because transitions can only reference rows
-        that were dequeued, and only ``state='queued'`` rows are ever
-        dequeued — every non-queued row's fold is the identity. Old
-        dirs get a manifest-level ``state != 'queued'`` exclusion
+        Incremental: fold and rewrite ONLY the queued partition —
+        terminal-state files are never rewritten (r3 verdict #5: a full
+        compact at 10^10 rows is a 1.2 TB rewrite per call). Sound
+        because transitions can only reference rows that were dequeued,
+        and only ``state='queued'`` rows are ever dequeued — every
+        non-queued row's fold is the identity. Old dirs get a
+        manifest-level ``state != 'queued'`` exclusion
         (Catalog.replace_partition); the folded output (still-queued +
         newly-terminal + retry-pending rows) lands in one new dir.
-        ``incremental=False`` does the classic full rewrite (bounds
-        total dir count; a real deployment would run it rarely, like
-        Iceberg's full rewrite_data_files).
 
         ``defer_state_trim`` (r6 async compact, guide §2.6): commit
         only the FRONTIER fold here and return a zero-arg ``finish``
@@ -1048,17 +1031,7 @@ class FrontierStore:
         concurrent reader sees either (old frontier, old state) or
         (folded frontier, old state), and both are exact (the fold is
         redundant with the anti-join, never contradictory)."""
-        return self._compact(band_col, incremental=True,
-                             defer_state_trim=defer_state_trim)
-
-    def compact_full(self, band_col: str | None = None) -> None:
-        self._compact(band_col, incremental=False)
-
-    def _compact(self, band_col: str | None, incremental: bool,
-                 defer_state_trim: bool = False):
-        f = self.cat.read("frontier")
-        if incremental:
-            f = f.filter(F.col("state") == "queued")
+        f = self.cat.read("frontier").filter(F.col("state") == "queued")
         t = self.cat.read("frontier_state")
         latest = t.groupBy(
             F.col("url_hash").alias("__s_hash"), F.col("url").alias("__s_url")
@@ -1085,13 +1058,9 @@ class FrontierStore:
         kept = kept.persist()
         kept.count()  # materialize before overwriting its source table
         partition_by = ["state"] + ([ "priority", band_col] if band_col else [])
-        if incremental:
-            v = self.cat.replace_partition(
-                "frontier", folded, "state", "queued",
-                partition_by=partition_by,
-            )
-        else:
-            v = self.cat.overwrite("frontier", folded, partition_by=partition_by)
+        v = self.cat.replace_partition(
+            "frontier", folded, "state", "queued", partition_by=partition_by,
+        )
         def _trim_state() -> None:
             self.cat.overwrite("frontier_state", kept.select(*[
                 fld.name for fld in self._state_schema.fields

@@ -152,16 +152,6 @@ def wav_pcm_decoder(payload: bytes) -> dict:
     return {"mime": "audio/wav", "sample_rate": int(rate), "samples": x}
 
 
-def fake_audio_decoder(payload: bytes) -> dict:
-    """Deterministic stand-in for plumbing tests: a stable sample count
-    and ramp derived from the payload bytes."""
-    if not payload:
-        raise ValueError("empty payload")
-    n = 1000 + payload[0] * 16
-    x = np.sin(np.arange(n, dtype=np.float32) * (0.01 + payload[-1] / 4096.0))
-    return {"mime": "audio/fake", "sample_rate": 8000, "samples": x}
-
-
 def decode_audio(
     df: DataFrame,
     payload_col: str = "payload",

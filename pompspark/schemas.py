@@ -82,11 +82,6 @@ TRACE = T.StructType([
     T.StructField("host", T.StringType(), False),
 ])
 
-SEEDS = T.StructType([
-    T.StructField("url", T.StringType(), False),
-    T.StructField("priority", T.DoubleType(), True),
-])
-
 SITEMAP = T.StructType([
     T.StructField("src_url", T.StringType(), False),
     T.StructField("dst_url", T.StringType(), False),

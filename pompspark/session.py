@@ -27,6 +27,13 @@ def make_pyfiles_zip(out_path: str | None = None) -> str:
     return out_path
 
 
+def _default_driver_memory() -> str:
+    """min(48g, physical RAM / 2): a flat 48g heap on a smaller host
+    lets the local-mode JVM grow until the OS kills it."""
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return f"{min(48 << 10, ram_mb // 2)}m"
+
+
 def build_spark(
     master: str | None = None,
     app_name: str = "pompspark",
@@ -67,10 +74,14 @@ def build_spark(
     )
     b = (
         b.config("spark.sql.shuffle.partitions", str(n_shuffle))
-        # local mode: the driver JVM is the only executor — give it the
-        # box (overridable); bound Arrow batches so N threads x batch of
-        # fat html rows can't exhaust direct memory.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        # local mode: the driver JVM is the only executor — give it
+        # half the host's RAM, capped at 48g (SPARK_GRAFT_DRIVER_MEM
+        # overrides); bound Arrow batches so N threads x batch of fat
+        # html rows can't exhaust direct memory.
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_memory()),
+        )
         .config("spark.driver.maxResultSize", "8g")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         .config("spark.sql.adaptive.enabled", "true")
@@ -85,10 +96,9 @@ def build_spark(
             str(n_shuffle),
         )
         .config("spark.sql.session.timeZone", "UTC")
-        # r6: parquet default flipped snappy -> zstd (guide §6; env
-        # knob for A/B). The engine's round files are written AND
-        # fsynced inside the timed window, so output bytes are wall
-        # time. Measured on this host, one 120k-row round dir: zstd
+        # r6: parquet default flipped snappy -> zstd (guide §6). The
+        # engine's round files are written AND fsynced inside the
+        # timed window, so output bytes are wall time. Measured on this host, one 120k-row round dir: zstd
         # wrote FASTER (1.33 s vs 2.36 s — the repeated-body text
         # compresses 233 MB -> 36 MB, and writing 6.5x fewer bytes
         # beats the extra compress CPU) and the column-pruned
@@ -96,10 +106,7 @@ def build_spark(
         # likewise (730 -> 88 MB on a 200k-page sample, full-html
         # scans 1.53 s -> 1.35 s). Same lever a real cluster wants:
         # fewer bytes through NIC/disk at equal-or-less wall time.
-        .config(
-            "spark.sql.parquet.compression.codec",
-            os.environ.get("SPARK_GRAFT_PARQUET_CODEC", "zstd"),
-        )
+        .config("spark.sql.parquet.compression.codec", "zstd")
         # r6: vectorized-reader batch rows 4096 -> 512 (guide §6,
         # measured on this host): the default pre-sizes every column
         # vector for 4096 rows, which for ~30 KB html/text cells means
@@ -109,11 +116,8 @@ def build_spark(
         # (frontier, ~100 B rows) measured faster (0.25 -> 0.16 s
         # warm). 512 rows x 30 KB ≈ 15 MB per batch keeps fat-row
         # scans allocation-light while staying large enough for
-        # vectorization on narrow rows. Env-overridable.
-        .config(
-            "spark.sql.parquet.columnarReaderBatchSize",
-            os.environ.get("SPARK_GRAFT_PARQUET_BATCH_ROWS", "512"),
-        )
+        # vectorization on narrow rows.
+        .config("spark.sql.parquet.columnarReaderBatchSize", "512")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Python-worker crash forensics: without these a dead worker
         # reports only "exited unexpectedly (crashed)" (BENCH_r03's

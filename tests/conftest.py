@@ -10,19 +10,14 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 @pytest.fixture(scope="session")
 def spark():
-    from pyspark.sql import SparkSession
+    from pompspark.session import build_spark
 
-    s = (
-        SparkSession.builder.master("local[4]")
-        .appName("pompspark-tests")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "8g")
-        .getOrCreate()
+    # the session the benchmark runs, at test scale. Speculation stays
+    # off: check_speculation_safe refuses the paced fetchers some tests
+    # drive on a speculative session.
+    s = build_spark(
+        "local[4]", app_name="pompspark-tests", shuffle_partitions=8,
+        speculation=False,
     )
-    s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()

@@ -1,18 +1,19 @@
-"""Pins the r6 gen_pages optimization: build_bench_pages' fast text
-path (per-DOC extract + JVM assembly) must be byte-identical to the
-legacy per-PAGE extract UDF — including every construct that straddles
-the body's boundaries (unclosed tags, entities, comments, script
-blocks at the doc edges), which is exactly where the assembly argument
-could break."""
+"""Pins the r6 gen_pages optimization: build_bench_pages' text (per-DOC
+extract + JVM assembly) must be byte-identical to ``ref_extract`` run
+over each full page's html on the driver — the per-page extraction the
+optimization replaced ("legacy" in the test names) — including every
+construct that straddles the body's boundaries (unclosed tags,
+entities, comments, script blocks at the doc edges), which is exactly
+where the assembly argument could break."""
 
 from __future__ import annotations
 
 import os
 
 import pytest
-from pyspark.sql import functions as F
 
 from pompspark.benchgen import build_bench_pages
+from pompspark.extract import ref_extract
 
 # docs engineered to stress the body<->preamble and body<->anchor
 # boundaries of the assembled text
@@ -42,28 +43,30 @@ def _docs_df(spark, texts):
     )
 
 
-def _texts(spark, docs, mode: str, n_pages: int, outdegree: int,
-           body_repeat: int):
-    os.environ["BENCHGEN_TEXT_MODE"] = mode
-    try:
-        df = build_bench_pages(
-            spark, docs, n_pages=n_pages, n_hosts=7,
-            outdegree=outdegree, body_repeat=body_repeat,
-        )
-        return {r["url"]: r["text"] for r in df.select("url", "text").collect()}
-    finally:
-        os.environ.pop("BENCHGEN_TEXT_MODE", None)
+def _texts(spark, docs, n_pages: int, outdegree: int, body_repeat: int):
+    """url -> (generated text, ref_extract(html) computed on the driver)."""
+    df = build_bench_pages(
+        spark, docs, n_pages=n_pages, n_hosts=7,
+        outdegree=outdegree, body_repeat=body_repeat,
+    )
+    return {
+        r["url"]: (r["text"], ref_extract(bytes(r["html"]))[0])
+        for r in df.select("url", "text", "html").collect()
+    }
+
+
+def _assert_text_is_ref_extract(texts):
+    for url, (got, want) in texts.items():
+        assert got.encode("utf-8") == want.encode("utf-8"), url
 
 
 @pytest.mark.parametrize("outdegree,body_repeat", [(20, 3), (3, 1), (0, 2)])
 def test_fast_text_matches_legacy_on_nasty_docs(spark, outdegree, body_repeat):
     docs = _docs_df(spark, NASTY_DOCS)
     n_pages = len(NASTY_DOCS) * 3  # every doc appears on several pages
-    fast = _texts(spark, docs, "fast", n_pages, outdegree, body_repeat)
-    legacy = _texts(spark, docs, "legacy", n_pages, outdegree, body_repeat)
-    assert fast.keys() == legacy.keys()
-    for url in legacy:
-        assert fast[url] == legacy[url], url
+    texts = _texts(spark, docs, n_pages, outdegree, body_repeat)
+    assert len(texts) == n_pages
+    _assert_text_is_ref_extract(texts)
 
 
 def test_fast_text_matches_legacy_on_sf_docs(spark):
@@ -73,17 +76,17 @@ def test_fast_text_matches_legacy_on_sf_docs(spark):
         pytest.skip("no testdata")
     docs = spark.read.parquet(path)
     n = docs.count()
-    fast = _texts(spark, docs, "fast", n * 2, 20, 2)
-    legacy = _texts(spark, docs, "legacy", n * 2, 20, 2)
-    assert fast == legacy
+    texts = _texts(spark, docs, n * 2, 20, 2)
+    assert len(texts) == n * 2
+    _assert_text_is_ref_extract(texts)
 
 
 def test_fast_text_shape(spark):
     """The assembled text starts with the title words and ends with
     outdegree 'L' anchors (sanity on the fixed segments)."""
     docs = _docs_df(spark, ["hello world"])
-    fast = _texts(spark, docs, "fast", 2, 4, 1)
-    for url, text in fast.items():
+    texts = _texts(spark, docs, 2, 4, 1)
+    for url, (text, _) in texts.items():
         title = url.split("//", 1)[1]
         assert text.startswith(title + " ")
         assert text.endswith(" L L L L")

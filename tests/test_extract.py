@@ -1,5 +1,6 @@
 """Byte-identity contract for the extractor (SURVEY §5.2.2): the Spark
-pandas UDF must produce byte-identical text vs ``ref_extract`` per row."""
+extract boundary must produce byte-identical text vs ``ref_extract``
+per row."""
 
 from __future__ import annotations
 
@@ -50,32 +51,37 @@ def test_pages_fixture_text_is_ref_extract():
 
 
 def test_spark_udf_byte_identity(spark):
-    """Every row: utf-8 bytes of UDF text == bytes of ref_extract text,
-    and links match exactly."""
-    from pompspark.extract import register_extract_udf
+    """extract_attach_arrow, row by row: utf-8 bytes of its text ==
+    bytes of ref_extract's, links == the sitemap's anchors; a NULL html
+    row gives text NULL and links []; html is dropped and every other
+    column passes through unchanged."""
+    from pyspark.sql import functions as F
 
-    pages = small_pages_df(spark)
-    udf = register_extract_udf()
-    out = (
-        pages.withColumn("ext", udf("html"))
-        .select("url", "text", "ext.text", "ext.links")
-        .toDF("url", "expected_text", "udf_text", "udf_links")
-        .collect()
+    from pompspark.extract import extract_attach_arrow
+
+    pages = small_pages_df(spark).withColumnRenamed("text", "expected")
+    null_url = "http://null.example/p0"
+    pages = pages.unionByName(
+        pages.limit(1).withColumn("url", F.lit(null_url))
+        .withColumn("html", F.lit(None).cast("binary"))
     )
-    assert len(out) == len(SMALL_SITEMAP)
-    for r in out:
-        assert r.udf_text.encode("utf-8") == r.expected_text.encode("utf-8"), r.url
-        assert list(r.udf_links) == SMALL_SITEMAP[r.url]
-
-
-def test_map_in_pandas_variant(spark):
-    from pompspark.extract import extract_map_in_pandas
-
-    pages = small_pages_df(spark).select("url", "html", "text")
-    out = extract_map_in_pandas(pages.withColumnRenamed("text", "expected"))
-    rows = out.select("url", "expected", "text").collect()
+    want = {r.url: r for r in pages.collect()}
+    out = extract_attach_arrow(pages)
+    assert out.columns == ["url", "warc_ts", "expected", "lang", "text", "links"]
+    rows = out.collect()
+    assert sorted(r.url for r in rows) == sorted(want)
     for r in rows:
-        assert r.text == r.expected
+        src = want[r.url]
+        assert (r.warc_ts, r.expected, r.lang) == (
+            src.warc_ts, src.expected, src.lang
+        ), r.url
+        if r.url == null_url:
+            assert r.text is None and list(r.links) == []
+            continue
+        ref_text, _ = ref_extract(bytes(src.html))
+        assert r.text.encode("utf-8") == ref_text.encode("utf-8"), r.url
+        assert list(r.links) == SMALL_SITEMAP[r.url]
+    assert len(rows) == len(SMALL_SITEMAP) + 1
 
 
 def test_ws_collapse_equivalence():

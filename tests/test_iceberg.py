@@ -158,7 +158,6 @@ def test_engine_runs_on_non_dir_catalog(spark, tmp_path, ordering):
             ordering=ordering, per_round_budget=5, per_host_budget=3,
             compact_every=2, banded_dequeue=True,
             use_seen_filter=True, seen_mode="approx",
-            use_bucketed_index=False,
             seen_shards=2, seen_capacity_per_shard=10_000,
             catalog=catalog,
         )

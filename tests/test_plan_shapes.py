@@ -259,3 +259,27 @@ def test_quota_sample_single_exchange_on_quota_key(spark, tmp_path):
     plan = _plan(quota_sample(docs, "source", 5, F.col("doc_id").asc()))
     assert len(re.findall(r"\bExchange hashpartitioning\(source", plan)) == 1, plan
     assert "rangepartitioning" not in plan, plan
+
+
+# Spark jobs one default-engine round runs on the small fixture (AQE
+# query stages, broadcasts and writes each count). A dequeue or merge
+# rewrite that adds an action changes this number.
+ROUND_JOBS = 16
+
+
+def test_default_round_spark_job_count(spark, tmp_path):
+    from pompspark.engine import simulated_engine
+    from pompspark.fixtures import SMALL_SEED, small_pages_df
+
+    eng = simulated_engine(spark, str(tmp_path / "jobs"), small_pages_df(spark))
+    eng.seed([SMALL_SEED])
+    sc = spark.sparkContext
+    group = f"round-jobs-{tmp_path.name}"
+    sc.setJobGroup(group, "one default-engine round")
+    try:
+        assert eng.run_round() == 1
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job-start events reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == ROUND_JOBS

@@ -91,7 +91,7 @@ def test_seen_approx_mode_matches_exact_on_small_web(spark, tmp_path):
     anti-join confirmation (the O(batch)-merge scale path). On a small
     web with an amply-sized bloom there are no false positives, so the
     trace must equal the exact run's — and the merge must not read the
-    frontier index at all (use_bucketed_index=False works)."""
+    frontier index at all (approx mode builds none)."""
     plain = _engine(spark, str(tmp_path / "pl"))
     plain.seed([SMALL_SEED])
     plain.run(max_rounds=100)
@@ -99,13 +99,14 @@ def test_seen_approx_mode_matches_exact_on_small_web(spark, tmp_path):
     approx = _engine(
         spark, str(tmp_path / "ap"),
         use_seen_filter=True, seen_shards=4, seen_capacity_per_shard=10_000,
-        seen_mode="approx", use_bucketed_index=False,
+        seen_mode="approx",
     )
     approx.seed([SMALL_SEED])
     approx.run(max_rounds=100)
 
     assert _trace_tuples(approx) == _trace_tuples(plain)
     assert approx.cat.read("seen").count() > 0
+    assert not approx.store.use_index
 
 
 def test_seen_approx_requires_filter(spark, tmp_path):

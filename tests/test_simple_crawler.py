@@ -438,7 +438,7 @@ def test_combined_scale_flags_trace_equivalence(spark, tmp_path, ordering, retri
         ordering=ordering, per_round_budget=11, per_host_budget=3,
         max_retries=retries, retry_delay_rounds=1, compact_every=2,
         banded_dequeue=True,
-        use_seen_filter=True, seen_mode="approx", use_bucketed_index=False,
+        use_seen_filter=True, seen_mode="approx",
         seen_shards=4, seen_capacity_per_shard=10_000,
     )
     eng.seed(seeds)

@@ -35,29 +35,44 @@ def test_topk_matches_order_by_limit(spark, ordering, k):
     assert got == want
 
 
-def test_engine_trace_identical_with_parallel_topk(spark, tmp_path):
+def test_engine_trace_identical_with_parallel_topk(spark, tmp_path, monkeypatch):
     """Forcing the parallel top-k path must not change the trace."""
+    import inspect
+
     from pompspark.engine import simulated_engine
     from pompspark.fixtures import SMALL_SEED, small_pages_df
     import pompspark.frontier as fr
 
-    def run(threshold):
-        import functools
+    orig_dequeue, orig_topk = fr.dequeue, fr.exact_ranked_topk
+    topk_calls = []
 
-        orig = fr.dequeue
+    def counting_topk(*a, **kw):
+        topk_calls.append(1)
+        return orig_topk(*a, **kw)
+
+    # dequeue_banded (the engine's one dequeue call) reaches both
+    # through the frontier module's globals
+    monkeypatch.setattr(fr, "exact_ranked_topk", counting_topk)
+
+    def run(threshold):
         eng = simulated_engine(
             spark, str(tmp_path / f"t{threshold}"), small_pages_df(spark),
             ordering="bfs", per_round_budget=3, per_host_budget=2,
         )
-        # route through the requested threshold
-        import pompspark.engine as em
+        sig = inspect.signature(orig_dequeue)
 
-        em.dequeue = functools.partial(orig, parallel_topk_threshold=threshold)
-        try:
-            eng.seed([SMALL_SEED])
-            eng.run(max_rounds=50)
-        finally:
-            em.dequeue = orig
+        def forced(*a, **kw):  # override however the caller passes it
+            bound = sig.bind(*a, **kw)
+            bound.arguments["parallel_topk_threshold"] = threshold
+            return orig_dequeue(*bound.args, **bound.kwargs)
+
+        monkeypatch.setattr(fr, "dequeue", forced)
+        eng.seed([SMALL_SEED])
+        eng.run(max_rounds=50)
         return [(r.round, r.seq, r.url) for r in eng.trace().collect()]
 
-    assert run(threshold=1) == run(threshold=10**9)
+    parallel = run(threshold=1)
+    assert topk_calls, "the parallel top-k never ran: the patch missed"
+    n_parallel = len(topk_calls)
+    assert parallel == run(threshold=10**9)
+    assert len(topk_calls) == n_parallel  # the default path never calls it
